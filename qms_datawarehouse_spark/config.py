@@ -1,54 +1,20 @@
 """Engine settings.
 
-Mirrors the reference's env-driven config surface
-(/root/reference/src/config.py:19-57): micro-batch size, sync interval,
-source map, target collections — plus Spark-specific knobs (shuffle
-partitions, warehouse root). Defaults are sized for local[32] testing
-but every knob is meant to be overridden for cluster deployment.
+The sync semantics a caller can choose. The reference's other config
+keys (src/config.py: batch size, sync interval, source map) are not
+settings here: Spark's partitioned scan owns batching, the scheduler
+takes its interval as an argument, and callers pass sources and the
+warehouse root directly.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
-
-
-def _int_env(name: str, default: int) -> int:
-    try:
-        return int(os.environ.get(name, default))
-    except (TypeError, ValueError):
-        return default
+from dataclasses import dataclass
 
 
 @dataclass
 class Settings:
-    """Runtime configuration for the engine.
-
-    Attributes mirror reference config keys where a counterpart exists:
-    ``sync_batch_size`` ≈ SYNC_BATCH_SIZE (src/config.py:19),
-    ``sync_interval_minutes`` ≈ SYNC_INTERVAL_MINUTES (src/config.py:23),
-    ``target_collections`` ≈ TARGET_COLLECTIONS (src/config.py:25),
-    ``sources`` ≈ MONGO_SOURCES (src/config.py:32-57).
-    """
-
-    # Warehouse root: parquet tables live at {warehouse_dir}/{table}/
-    warehouse_dir: str = field(
-        default_factory=lambda: os.environ.get("QMS_WAREHOUSE_DIR", "/tmp/qms_warehouse")
-    )
-    # Micro-batch row target for streaming ingestion.
-    sync_batch_size: int = field(default_factory=lambda: _int_env("SYNC_BATCH_SIZE", 5000))
-    sync_interval_minutes: int = field(
-        default_factory=lambda: _int_env("SYNC_INTERVAL_MINUTES", 60)
-    )
-    # name -> comma-separated collection list (reference loops sources × collections)
-    target_collections: tuple[str, ...] = ("ticket", "users")
-    sources: dict[str, str] = field(default_factory=dict)
-
-    # Spark knobs
-    shuffle_partitions: int = field(
-        default_factory=lambda: _int_env("SPARK_GRAFT_CPUS", 32)
-    )
-    cpus: int = field(default_factory=lambda: _int_env("SPARK_GRAFT_CPUS", 32))
+    """Runtime configuration for the engine."""
 
     # Incremental-sync semantics: the reference uses a strict `$gt`
     # high-water-mark predicate (src/services/etl.py:210-211), which

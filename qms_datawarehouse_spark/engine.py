@@ -33,6 +33,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from qms_datawarehouse_spark import observability
 from qms_datawarehouse_spark.config import Settings
@@ -63,6 +64,53 @@ def delta_filter(
     return df.filter(F.expr(f"{cursor_col} {op} '{last_synced.isoformat()}'"))
 
 
+def _prepare_delta(
+    warehouse: ParquetWarehouse,
+    source_df: DataFrame,
+    source_name: str,
+    collection: str,
+    cursor_col: str,
+    delta_mode: str,
+) -> DataFrame:
+    """One collection's batch, ready for the keyed merge: checkpoint
+    read → string-cursor cast → delta filter → normalize → cursor
+    column check. Shared by every sync entry point."""
+    last = checkpoint.get_last_synced(warehouse, source_name, collection)
+
+    # JSON sources surface ISO-8601 cursors as strings (Spark's JSON
+    # reader does not infer timestamps by default). The checkpoint
+    # contract is temporal (reference db.py:43-50: last_synced_at
+    # TIMESTAMP), so coerce once here — BEFORE the delta filter, not
+    # after it (round-13 audit): filtering the raw string column
+    # compared cursor values LEXICOGRAPHICALLY against the
+    # checkpoint's isoformat, which silently LOSES rows whose string
+    # order disagrees with their temporal order — e.g. an offset
+    # cursor '2024-01-01T23:30:00-02:00' (= 01:30 UTC next day) sorts
+    # before a '2024-01-02T00:00:00' checkpoint and never syncs. Cast
+    # first and the comparison is temporal; the merge's running max()
+    # then yields a datetime and the stored table carries a typed
+    # timestamp like the reference's column.
+    if cursor_col in source_df.columns and isinstance(
+        source_df.schema[cursor_col].dataType, T.StringType
+    ):
+        source_df = source_df.withColumn(
+            cursor_col, F.col(cursor_col).cast("timestamp")
+        )
+
+    delta = delta_filter(source_df, cursor_col, last, delta_mode)
+    cleaned = clean_records(delta, source_name=source_name)
+
+    # The checkpoint contract REQUIRES the cursor column — fail hard
+    # (etl.py:77-84: no silent fallback); callers leave a FAILED
+    # history row.
+    if cursor_col not in cleaned.columns:
+        raise ValueError(
+            f"cursor column {cursor_col!r} missing from delta for "
+            f"{source_name}.{collection}"
+        )
+    return cleaned
+
+
 def sync_dataframe(
     warehouse: ParquetWarehouse,
     source_df: DataFrame,
@@ -79,43 +127,10 @@ def sync_dataframe(
     t0 = time.monotonic()
     history.record(warehouse, source_name, collection, "STARTED", started)
     try:
-        last = checkpoint.get_last_synced(warehouse, source_name, collection)
-
-        # JSON sources surface ISO-8601 cursors as strings (Spark's
-        # JSON reader does not infer timestamps by default). The
-        # checkpoint contract is temporal (reference db.py:43-50:
-        # last_synced_at TIMESTAMP), so coerce once here — BEFORE the
-        # delta filter, not after it (round-13 audit): filtering the
-        # raw string column compared cursor values LEXICOGRAPHICALLY
-        # against the checkpoint's isoformat, which silently LOSES
-        # rows whose string order disagrees with their temporal order
-        # — e.g. an offset cursor '2024-01-01T23:30:00-02:00'
-        # (= 01:30 UTC next day) sorts before a '2024-01-02T00:00:00'
-        # checkpoint and never syncs. Cast first and the comparison is
-        # temporal; the merge's running max() then yields a datetime
-        # and the stored table carries a typed timestamp like the
-        # reference's column.
-        from pyspark.sql import types as T
-
-        src = source_df
-        if cursor_col in src.columns and isinstance(
-            src.schema[cursor_col].dataType, T.StringType
-        ):
-            src = src.withColumn(
-                cursor_col, F.col(cursor_col).cast("timestamp")
-            )
-
-        delta = delta_filter(src, cursor_col, last, settings.delta_mode)
-        cleaned = clean_records(delta, source_name=source_name)
-
-        # The checkpoint contract REQUIRES the cursor column — fail
-        # hard (etl.py:77-84: no silent fallback), leaving a FAILED
-        # history row via the except path below.
-        if cursor_col not in cleaned.columns:
-            raise ValueError(
-                f"cursor column {cursor_col!r} missing from delta for "
-                f"{source_name}.{collection}"
-            )
+        cleaned = _prepare_delta(
+            warehouse, source_df, source_name, collection, cursor_col,
+            settings.delta_mode,
+        )
 
         # A1 rides the merge's own count aggregation (merge_upsert_stats)
         # — no separate max() pass over the delta.
@@ -290,26 +305,16 @@ def sync_collections_atomic(
     settings = settings or Settings()
     started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     t0 = time.monotonic()
-    from pyspark.sql import types as T
-
-    batches: dict[str, DataFrame] = {}
-    for table, source_df in sorted(frames.items()):
+    for table in sorted(frames):
         history.record(warehouse, source_name, table, "STARTED", started)
-        last = checkpoint.get_last_synced(warehouse, source_name, table)
-        delta = delta_filter(source_df, cursor_col, last, settings.delta_mode)
-        cleaned = clean_records(delta, source_name=source_name)
-        if cursor_col not in cleaned.columns:
-            raise ValueError(
-                f"cursor column {cursor_col!r} missing from delta for "
-                f"{source_name}.{table}"
-            )
-        if isinstance(cleaned.schema[cursor_col].dataType, T.StringType):
-            cleaned = cleaned.withColumn(
-                cursor_col, F.col(cursor_col).cast("timestamp")
-            )
-        batches[table] = cleaned
-
     try:
+        batches = {
+            table: _prepare_delta(
+                warehouse, source_df, source_name, table, cursor_col,
+                settings.delta_mode,
+            )
+            for table, source_df in sorted(frames.items())
+        }
         stats = merge_upsert_atomic(
             warehouse, batches, key=key, order_col=cursor_col
         )

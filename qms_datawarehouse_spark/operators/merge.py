@@ -160,6 +160,18 @@ def merge_upsert_stats(
     raise last_exc
 
 
+def _write_table_facts(
+    warehouse: ParquetWarehouse,
+    table: str,
+    buckets: int,
+    key: str,
+    order_col: str | None,
+) -> None:
+    warehouse.write_meta(
+        table, {"n_buckets": buckets, "key": key, "order_col": order_col}
+    )
+
+
 def _merge_upsert_once(
     warehouse: ParquetWarehouse,
     table: str,
@@ -210,25 +222,23 @@ def _merge_upsert_once(
         # read-current/commit-against-newer TOCTOU).
         base = warehouse.current_version_name(table)
         if base is None:
+            # Create-on-first-write (S11): the first version is a full
+            # bucketed write CASed against "no table yet" — if a racing
+            # writer creates the table first, the CAS fails and the
+            # retry takes the merge path instead of clobbering their
+            # version. The bucket count becomes a table fact, not a
+            # per-call opinion, written AFTER the commit (inside a
+            # transaction, merge_upsert_atomic writes it after the joint
+            # commit) so an aborted batch leaves no facts behind.
             if txn is not None:
-                # create-on-first-write inside a multi-table txn would
-                # leave meta for a table that may never commit; create
-                # tables first, then merge atomically
-                raise ValueError(
-                    f"atomic merge requires existing table {table!r} "
-                    "(create-on-first-write is single-table only)"
+                txn.stage_write(
+                    table, batch, partition_by=[BUCKET_COL], expect_base=None
                 )
-            # Create-on-first-write (S11); bucket count becomes a table
-            # fact, not a per-call opinion. expect_base=None: if a racing
-            # writer creates the table first, CAS fails and the retry
-            # takes the merge path instead of clobbering their version.
-            warehouse.write_version(
-                table, batch, partition_by=[BUCKET_COL], expect_base=None
-            )
-            warehouse.write_meta(
-                table,
-                {"n_buckets": buckets, "key": key, "order_col": order_col},
-            )
+            else:
+                warehouse.write_version(
+                    table, batch, partition_by=[BUCKET_COL], expect_base=None
+                )
+                _write_table_facts(warehouse, table, buckets, key, order_col)
             return n, hwm
 
         target = warehouse.read(table, version=base)
@@ -279,23 +289,6 @@ def _merge_upsert_once(
         batch.unpersist()
 
 
-def merge_dataframes(
-    target: DataFrame,
-    updates: DataFrame,
-    key: str = "_id",
-    order_col: str | None = "updated_at",
-) -> DataFrame:
-    """Pure-DataFrame merge (no I/O): last-write-wins keyed union.
-
-    The logical core of the upsert as a composable operator —
-    ``target ⋉̸ updates ∪ updates`` with in-batch dedup. Used by
-    streaming foreachBatch and by oracle-checked queries.
-    """
-    batch = dedup_last_write_wins(updates, key, order_col)
-    survivors = target.join(batch.select(key), on=key, how="left_anti")
-    return survivors.unionByName(batch, allowMissingColumns=True)
-
-
 def merge_upsert_atomic(
     warehouse: ParquetWarehouse,
     batches: dict[str, DataFrame],
@@ -315,8 +308,9 @@ def merge_upsert_atomic(
     Conflict behaviour: if ANY table's base advances mid-transaction,
     the whole batch aborts (nothing visible) and is recomputed against
     the winners — the same retry-by-recompute as merge_upsert_stats,
-    but all-or-nothing per attempt. Tables must exist (create them
-    with write_version first); returns {table: (rows, hwm)}.
+    but all-or-nothing per attempt. A table that does not exist yet is
+    created by its first batch inside the same commit (its bucket facts
+    are written right after it); returns {table: (rows, hwm)}.
     """
     from qms_datawarehouse_spark.operators.transaction import (
         MultiTableTransaction,
@@ -335,6 +329,13 @@ def merge_upsert_atomic(
                 )
             if txn.staged:
                 txn.commit()
+                for table, staged in txn.staged.items():
+                    if staged["base"] is None:  # created by this batch
+                        _write_table_facts(
+                            warehouse, table,
+                            _resolve_buckets(warehouse, table, n_buckets),
+                            key, order_col,
+                        )
             else:  # every batch empty — nothing to flip
                 txn.abort()
             return stats

@@ -10,7 +10,11 @@ flip all the ``_CURRENT`` pointers as one atomic unit.
 
 POSIX cannot replace N files atomically, so atomicity comes from a
 WRITE-AHEAD INTENT JOURNAL + roll-forward recovery (the same protocol
-as Delta/Iceberg multi-partition commits, and databases generally):
+as Delta/Iceberg multi-partition commits, and databases generally).
+Staging is the warehouse's own staging writers (``_stage_version`` /
+``_stage_version_partial`` — the same layout and clustering as a
+single-table write); the commit is the warehouse's one commit routine
+(``ParquetWarehouse._commit``):
 
 1. stage    — write each table's version dir (parquet + schema);
               pointers untouched; base version captured per table.
@@ -27,12 +31,12 @@ as Delta/Iceberg multi-partition commits, and databases generally):
 
 Crash before 4 ⇒ nothing visible; staged dirs are inert garbage
 (``vacuum_orphans`` removes them). Crash between 4 and 6 ⇒
-``recover_transactions`` rolls FORWARD: any table whose pointer does
-not yet name the journaled version is repointed (idempotent), then
-the journal is cleared. Readers pin per-table snapshots via
-``warehouse.read(table, version=)``; ``snapshot_versions`` returns a
-cross-table-consistent set by refusing to read while a journal is in
-the committing window.
+``recover_transactions`` rolls FORWARD through the same commit
+routine: any table whose pointer does not yet name the journaled
+version is repointed (idempotent), then the journal is cleared.
+Readers pin per-table snapshots via ``warehouse.read(table,
+version=)``; ``snapshot_versions`` returns a cross-table-consistent
+set by refusing to read while a journal is in the committing window.
 
 Scale: the journal is O(tables) metadata; staging is the same
 parallel parquet write as any version; locks are held only for the
@@ -49,23 +53,15 @@ import uuid
 
 from pyspark.sql import DataFrame
 
+# SimulatedCrash is re-exported: callers of the commit seam import it here
 from qms_datawarehouse_spark.warehouse import (
+    _UNCHECKED,
+    TXN_DIR,
     ConcurrentWriteError,
     ParquetWarehouse,
+    SimulatedCrash,
     VERSIONS_LOG,
 )
-
-TXN_DIR = "_TXN"
-
-
-class SimulatedCrash(RuntimeError):
-    """Raised by the test-only crash seam in ``commit``."""
-
-
-def _txn_dir(wh: ParquetWarehouse) -> str:
-    d = os.path.join(wh.root, TXN_DIR)
-    os.makedirs(d, exist_ok=True)
-    return d
 
 
 class MultiTableTransaction:
@@ -117,12 +113,7 @@ class MultiTableTransaction:
             if expect_base is MultiTableTransaction._BASE_AT_STAGE
             else expect_base
         )
-        version, vdir = self.wh._new_version_dir(table)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(vdir)
-        self.wh._write_schema_file(vdir, df.schema)
+        version = self.wh._stage_version(table, df, partition_by)
         self.staged[table] = {"version": version, "base": base}
         return version
 
@@ -154,33 +145,14 @@ class MultiTableTransaction:
         self.staged[table] = {"version": version, "base": base}
         return version
 
-    # -- journal -------------------------------------------------------
-
-    def _journal_path(self) -> str:
-        return os.path.join(_txn_dir(self.wh), f"{self.txn_id}.json")
-
-    def _write_journal(self) -> None:
-        payload = {
-            "txn_id": self.txn_id,
-            "state": "committing",
-            "committed_at": time.time(),
-            "tables": {
-                t: s["version"] for t, s in sorted(self.staged.items())
-            },
-        }
-        tmp = self._journal_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._journal_path())
-
     # -- commit / abort ------------------------------------------------
 
     def commit(
         self, keep_versions: int = 2, _crash_after_repoints: int | None = None
     ) -> dict[str, str]:
-        """All-or-nothing pointer flip for every staged table.
+        """All-or-nothing pointer flip for every staged table, through
+        the warehouse's commit routine (journaled under this
+        transaction's id).
 
         ``_crash_after_repoints`` is a TEST-ONLY seam: raise
         SimulatedCrash after that many pointer swaps, leaving the
@@ -191,44 +163,18 @@ class MultiTableTransaction:
             raise RuntimeError("transaction already finished")
         if not self.staged:
             raise ValueError("nothing staged")
-        tables = sorted(self.staged)
-        held: list[tuple[str, str]] = []
         try:
-            for t in tables:  # sorted ⇒ deadlock-free
-                held.append(self.wh._acquire_lock(t))
-            # CAS validation BEFORE anything becomes visible
-            for t in tables:
-                cur = self.wh.current_version_name(t)
-                if cur != self.staged[t]["base"]:
-                    raise ConcurrentWriteError(
-                        f"table {t!r}: base advanced from "
-                        f"{self.staged[t]['base']!r} to {cur!r} during the "
-                        f"transaction"
-                    )
-            self._write_journal()  # commit point
-            n = 0
-            for t in tables:
-                self.wh._repoint(t, self.staged[t]["version"])
-                n += 1
-                if (
-                    _crash_after_repoints is not None
-                    and n >= _crash_after_repoints
-                ):
-                    raise SimulatedCrash(
-                        f"crashed after {n}/{len(tables)} repoints"
-                    )
-            os.unlink(self._journal_path())
-            self._done = True
+            self.wh._commit(
+                {t: (s["version"], s["base"]) for t, s in self.staged.items()},
+                keep_versions,
+                txn_id=self.txn_id,
+                _crash_after_repoints=_crash_after_repoints,
+            )
         except ConcurrentWriteError:
-            self._cleanup_staged()
-            self._done = True
+            self._done = True  # the commit routine removed the staged dirs
             raise
-        finally:
-            for lock, token in held:
-                self.wh._release_lock(lock, token)
-        for t in tables:
-            self.wh._gc_versions(t, keep=keep_versions)
-        return {t: self.staged[t]["version"] for t in tables}
+        self._done = True
+        return {t: s["version"] for t, s in sorted(self.staged.items())}
 
     def abort(self) -> None:
         """Drop every staged version; nothing was ever visible."""
@@ -270,19 +216,17 @@ def recover_transactions(wh: ParquetWarehouse) -> list[dict]:
         if payload.get("state") != "committing":
             _unlink_quiet(path)
             continue
-        for t, version in sorted(payload["tables"].items()):
-            lock, token = wh._acquire_lock(t)
-            try:
-                cur = wh.current_version_name(t)
-                if cur != version:
-                    if not os.path.isdir(os.path.join(wh.table_dir(t), version)):
-                        raise RuntimeError(
-                            f"txn {payload['txn_id']}: staged version "
-                            f"{version!r} of {t!r} lost — cannot roll forward"
-                        )
-                    wh._repoint(t, version)
-            finally:
-                wh._release_lock(lock, token)
+        tables = payload["tables"]
+        for t, version in sorted(tables.items()):
+            if wh.current_version_name(t) != version and not os.path.isdir(
+                os.path.join(wh.table_dir(t), version)
+            ):
+                raise RuntimeError(
+                    f"txn {payload['txn_id']}: staged version "
+                    f"{version!r} of {t!r} lost — cannot roll forward"
+                )
+        # no txn_id: the journal being replayed IS the durable record
+        wh._commit({t: (v, _UNCHECKED) for t, v in tables.items()})
         _unlink_quiet(path)
         recovered.append(payload)
     return recovered

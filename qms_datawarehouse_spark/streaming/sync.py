@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from qms_datawarehouse_spark.operators.merge import merge_upsert
+from qms_datawarehouse_spark.operators.merge import merge_upsert, merge_upsert_atomic
 from qms_datawarehouse_spark.transform import clean_records
 from qms_datawarehouse_spark.warehouse import ParquetWarehouse
 
@@ -477,25 +477,14 @@ def stream_split_sync(
     half-applied (the DLT expectations pattern, with the cross-table
     torn-commit window closed).
 
-    Each epoch stages the two keyed merges' RESULTS as full versions
-    inside one transaction: the merge resolution (last-write-wins
-    against current state) runs first, producing the would-be new
-    tables; the pointer flips are the joint commit. A replayed epoch
-    re-merges idempotently (T3), same as stream_sync. Offsets commit
-    only after the transaction, so a crash replays into idempotent
-    state.
-
-    Scale note: full-version staging rewrites both tables per epoch —
-    right for the audit/quarantine pattern where the quarantine side
-    is small and the accept side compacts anyway; for huge accept
-    tables prefer stream_sync per table and accept the torn window,
-    or partial-staged transactions (future work)."""
+    Each epoch is one ``merge_upsert_atomic`` call over both tables:
+    the same order-aware keyed merge as stream_sync (a late row older
+    than the stored one never overwrites it), staged as O(touched-
+    bucket) partial versions pinned to the base each merge read, with
+    one joint commit. A replayed epoch re-merges idempotently (T3).
+    Offsets commit only after the transaction, so a crash replays
+    into idempotent state."""
     from pyspark.sql import functions as F
-
-    from qms_datawarehouse_spark.operators.merge import merge_dataframes
-    from qms_datawarehouse_spark.operators.transaction import (
-        MultiTableTransaction,
-    )
 
     stream = (
         spark.readStream.schema(schema)
@@ -505,20 +494,15 @@ def stream_split_sync(
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         cleaned = clean_records(batch_df, source_name=source_name)
-        ok = cleaned.filter(F.expr(accept_predicate))
-        bad = cleaned.filter(~F.expr(accept_predicate))
-        txn = MultiTableTransaction(warehouse)
-        for table, part in ((accept_table, ok), (quarantine_table, bad)):
-            target = (
-                warehouse.read(table)
-                if warehouse.table_exists(table)
-                else part.limit(0)
-            )
-            txn.stage_write(
-                table,
-                merge_dataframes(target, part, key=key, order_col=cursor_col),
-            )
-        txn.commit()
+        merge_upsert_atomic(
+            warehouse,
+            {
+                accept_table: cleaned.filter(F.expr(accept_predicate)),
+                quarantine_table: cleaned.filter(~F.expr(accept_predicate)),
+            },
+            key=key,
+            order_col=cursor_col,
+        )
 
     writer = stream.writeStream.foreachBatch(process_batch).outputMode("update")
     if checkpoint_dir:

@@ -53,6 +53,7 @@ SCHEMA_FILE = "_SCHEMA.json"
 VERSION_META_FILE = "_VERSION_META.json"
 VERSIONS_LOG = "_VERSIONS.jsonl"
 LOCK_FILE = "_LOCK"
+TXN_DIR = "_TXN"
 
 # sentinel: "don't check the base" (None is a real value — it means
 # "expect the table to have no committed version yet")
@@ -68,6 +69,11 @@ class ConcurrentWriteError(RuntimeError):
     """The table's current version advanced after this writer read its
     base — committing would silently discard the other writer's rows.
     Recompute against the new current version and retry."""
+
+
+class SimulatedCrash(RuntimeError):
+    """Raised by the test-only crash seam of ``ParquetWarehouse._commit``."""
+
 
 # P5 identifier safety (reference src/schemas/request.py:7,
 # src/api/routes.py:82-87): table names become filesystem paths, so an
@@ -316,53 +322,102 @@ class ParquetWarehouse:
         keep_versions: int,
         expect_base=_UNCHECKED,
     ) -> None:
-        tmp_ptr = self._pointer_path(table) + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp_ptr, "w") as f:
-            f.write(version)
-        lock, lock_token = self._acquire_lock(table)
+        """Commit one staged version of one table (``_commit`` with a
+        single entry — its own pointer swap is the commit point, so no
+        journal is written)."""
+        self._commit({table: (version, expect_base)}, keep_versions)
+
+    def _commit(
+        self,
+        staged: dict[str, tuple[str, object]],
+        keep_versions: int = 2,
+        txn_id: str | None = None,
+        _crash_after_repoints: int | None = None,
+    ) -> None:
+        """The one commit routine: repoint every table of ``staged``
+        (``{table: (version, expect_base)}``) at its staged version.
+
+        Locks are taken in sorted order (no deadlock between
+        committers); each ``expect_base`` is CAS-checked
+        (``_UNCHECKED`` skips it) and a conflict removes EVERY staged
+        dir before anything is visible. With a ``txn_id`` the intent
+        journal is written first — the commit point of a multi-table
+        transaction (protocol: operators/transaction.py); a single
+        swap is its own commit point and passes none. A table already
+        naming its version is not repointed, so a roll-forward replay
+        is idempotent. Locks are released, then old versions GC'd.
+
+        ``_crash_after_repoints`` is a TEST-ONLY seam: raise
+        ``SimulatedCrash`` after that many repoints, leaving the
+        journal in place for recovery tests.
+        """
+        tables = sorted(staged)
+        held: list[tuple[str, str]] = []
         try:
-            if expect_base is not _UNCHECKED:
-                cur = self.current_version_name(table)
-                if cur != expect_base:
-                    # the staged dir was never committed — remove it so
-                    # it can't be mistaken for a retained version
-                    os.unlink(tmp_ptr)
-                    shutil.rmtree(
-                        os.path.join(self.table_dir(table), version),
-                        ignore_errors=True,
-                    )
+            for t in tables:
+                held.append(self._acquire_lock(t))
+            current = {t: self.current_version_name(t) for t in tables}
+            for t in tables:
+                base = staged[t][1]
+                if base is not _UNCHECKED and current[t] != base:
+                    for u in tables:
+                        shutil.rmtree(
+                            os.path.join(self.table_dir(u), staged[u][0]),
+                            ignore_errors=True,
+                        )
                     raise ConcurrentWriteError(
-                        f"table {table!r}: base advanced from "
-                        f"{expect_base!r} to {cur!r} during the write"
+                        f"table {t!r}: base advanced from {base!r} to "
+                        f"{current[t]!r} during the write"
                     )
-            os.replace(tmp_ptr, self._pointer_path(table))  # atomic repoint
-            self._append_version_log(table, version)
-        finally:
-            self._release_lock(lock, lock_token)
-        self._gc_versions(table, keep=keep_versions)
-
-    def _append_version_log(self, table: str, version: str) -> None:
-        # version log gives time travel a commit ORDER (dir names
-        # are uuids); appended under the table lock and after the
-        # swap, so entries are totally ordered and each was live once
-        with open(
-            os.path.join(self.table_dir(table), VERSIONS_LOG), "a"
-        ) as f:
-            f.write(
-                json.dumps(
-                    {"version": version, "committed_at": time.time()}
-                )
-                + "\n"
+            journal = (
+                self._write_journal(txn_id, {t: staged[t][0] for t in tables})
+                if txn_id is not None
+                else None
             )
+            for n, t in enumerate(tables, 1):
+                version = staged[t][0]
+                if current[t] != version:
+                    ptr = self._pointer_path(t)
+                    tmp_ptr = ptr + f".tmp.{uuid.uuid4().hex[:8]}"
+                    with open(tmp_ptr, "w") as f:
+                        f.write(version)
+                    os.replace(tmp_ptr, ptr)  # atomic repoint
+                    # the version log gives time travel a commit ORDER
+                    # (dir names are uuids); appended under the table
+                    # lock and after the swap, so entries are totally
+                    # ordered and each was live once
+                    entry = {"version": version, "committed_at": time.time()}
+                    log = os.path.join(self.table_dir(t), VERSIONS_LOG)
+                    with open(log, "a") as f:
+                        f.write(json.dumps(entry) + "\n")
+                if _crash_after_repoints is not None and n >= _crash_after_repoints:
+                    raise SimulatedCrash(f"crashed after {n}/{len(tables)} repoints")
+            if journal is not None:
+                os.unlink(journal)
+        finally:
+            for lock, token in held:
+                self._release_lock(lock, token)
+        for t in tables:
+            self._gc_versions(t, keep=keep_versions)
 
-    def _repoint(self, table: str, version: str) -> None:
-        """Pointer swap + log append WITHOUT taking the table lock —
-        caller (multi-table transaction commit) already holds it."""
-        tmp_ptr = self._pointer_path(table) + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp_ptr, "w") as f:
-            f.write(version)
-        os.replace(tmp_ptr, self._pointer_path(table))
-        self._append_version_log(table, version)
+    def _write_journal(self, txn_id: str, versions: dict[str, str]) -> str:
+        """Durably write a transaction's intent journal; returns its path."""
+        tdir = os.path.join(self.root, TXN_DIR)
+        os.makedirs(tdir, exist_ok=True)
+        path = os.path.join(tdir, f"{txn_id}.json")
+        payload = {
+            "txn_id": txn_id,
+            "state": "committing",
+            "committed_at": time.time(),
+            "tables": versions,
+        }
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(payload, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+        return path
 
     # -- time travel ---------------------------------------------------
 
@@ -427,6 +482,25 @@ class ParquetWarehouse:
         base version) rides the same single pointer swap instead of a
         separate meta write with a crash window between the two.
         """
+        version = self._stage_version(
+            table, df, partition_by, cluster=cluster, extra_meta=extra_meta
+        )
+        self._swap_pointer(table, version, keep_versions, expect_base)
+        return os.path.join(self.table_dir(table), version)
+
+    def _stage_version(
+        self,
+        table: str,
+        df: DataFrame,
+        partition_by: list[str] | None = None,
+        cluster: bool = True,
+        extra_meta: dict | None = None,
+    ) -> str:
+        """The staging half of ``write_version`` — write the parquet
+        files, the schema and ``extra_meta`` into a fresh version dir —
+        WITHOUT the pointer swap. Returns the version name for the
+        caller's commit (multi-table transactions stage several and
+        flip all pointers together)."""
         version, vdir = self._new_version_dir(table)
         if partition_by and cluster:
             # cluster rows by the partition key before the partitioned
@@ -444,8 +518,7 @@ class ParquetWarehouse:
         self._write_schema_file(vdir, df.schema)
         if extra_meta is not None:
             self._write_version_meta(vdir, extra_meta)
-        self._swap_pointer(table, version, keep_versions, expect_base)
-        return vdir
+        return version
 
     @staticmethod
     def _write_version_meta(vdir: str, meta: dict) -> None:
@@ -559,12 +632,9 @@ class ParquetWarehouse:
         dropped that writer's rows (the lost-update TOCTOU).
         """
         version, base = self._stage_version_partial(
-            table, df, touched, partition_col, base_version, cluster=cluster
+            table, df, touched, partition_col, base_version,
+            cluster=cluster, extra_meta=extra_meta,
         )
-        if extra_meta is not None:
-            self._write_version_meta(
-                os.path.join(self.table_dir(table), version), extra_meta
-            )
         self._swap_pointer(table, version, keep_versions, expect_base=base)
         return os.path.join(self.table_dir(table), version)
 
@@ -576,10 +646,11 @@ class ParquetWarehouse:
         partition_col: str = BUCKET_COL,
         base_version: str | None = None,
         cluster: bool = True,
+        extra_meta: dict | None = None,
     ) -> tuple[str, str]:
         """The staging half of ``write_version_partial`` — write the
         touched partitions, hardlink-inherit the rest, write the
-        merged schema — WITHOUT the pointer swap. Returns
+        merged schema and version meta — WITHOUT the pointer swap. Returns
         ``(version, base_version_name)`` for the caller's own CAS
         commit (multi-table transactions stage several of these and
         flip all pointers together)."""
@@ -644,13 +715,14 @@ class ParquetWarehouse:
 
         # lineage inherits with the content: a partial write that does
         # not state its own extra_meta keeps the previous version's
-        # _VERSION_META.json (write_version_partial overwrites it
-        # afterwards when extra_meta IS given). Without this, any
-        # content-preserving maintenance rewrite of an MV — compact()
-        # most of all — silently dropped the reflected-base record and
-        # the next refresh crashed instead of staying incremental.
+        # _VERSION_META.json. Without this, any content-preserving
+        # maintenance rewrite of an MV — compact() most of all —
+        # silently dropped the reflected-base record and the next
+        # refresh crashed instead of staying incremental.
         prev_meta = os.path.join(prev, VERSION_META_FILE)
-        if os.path.exists(prev_meta):
+        if extra_meta is not None:
+            self._write_version_meta(vdir, extra_meta)
+        elif os.path.exists(prev_meta):
             shutil.copyfile(
                 prev_meta, os.path.join(vdir, VERSION_META_FILE)
             )

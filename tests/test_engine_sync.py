@@ -222,13 +222,25 @@ def test_string_cursor_column_is_coerced_to_timestamp(spark, warehouse):
     )
 
 
-def test_offset_string_cursor_is_compared_temporally(spark, warehouse):
+def _sync_atomic(warehouse, df, source_name, collection):
+    from qms_datawarehouse_spark.engine import sync_collections_atomic
+
+    return sync_collections_atomic(warehouse, {collection: df}, source_name)[0]
+
+
+@pytest.mark.parametrize(
+    "sync",
+    [sync_dataframe, _sync_atomic],
+    ids=["sync_dataframe", "sync_collections_atomic"],
+)
+def test_offset_string_cursor_is_compared_temporally(spark, warehouse, sync):
     """Round-13 audit: the cursor cast must happen BEFORE the delta
     filter. Filtering the raw string column compared cursors
     LEXICOGRAPHICALLY against the checkpoint's isoformat — an offset
     cursor '2024-01-01T23:30:00-02:00' (= 2024-01-02T01:30 UTC) sorts
     before a '2024-01-02T00:00:00' checkpoint string and the row was
-    silently LOST. Temporal comparison must sync it."""
+    silently LOST. Temporal comparison must sync it — through every
+    sync entry point."""
     schema = T.StructType(
         [
             T.StructField("_id", T.StringType()),
@@ -239,7 +251,7 @@ def test_offset_string_cursor_is_compared_temporally(spark, warehouse):
     first = spark.createDataFrame(
         [("a1", 1, "2024-01-02T00:00:00Z")], schema
     )
-    sync_dataframe(warehouse, first, "json://o", "t_off")
+    sync(warehouse, first, "json://o", "t_off")
     assert checkpoint.get_last_synced(
         warehouse, "json://o", "t_off"
     ) == dt.datetime(2024, 1, 2)
@@ -248,7 +260,7 @@ def test_offset_string_cursor_is_compared_temporally(spark, warehouse):
     delta = spark.createDataFrame(
         [("a2", 2, "2024-01-01T23:30:00-02:00")], schema
     )
-    res = sync_dataframe(warehouse, delta, "json://o", "t_off")
+    res = sync(warehouse, delta, "json://o", "t_off")
     assert res.records_synced == 1, "offset-cursor row was lost"
     out = warehouse.read("t_off")
     assert out.count() == 2

@@ -453,10 +453,19 @@ def test_stream_split_sync_atomic_quarantine(spark, warehouse, stream_dirs):
         ]
         _events_df(spark, batch2).write.parquet(f"{src}/b2")
         q.processAllAvailable()
+
+        # epoch 3: a late replay of event 2 with an OLDER ts must not
+        # overwrite the newer stored row (order-aware merge)
+        _events_df(spark, [(2, t, 101, "view", 7.0, None)]).write.parquet(
+            f"{src}/b3"
+        )
+        q.processAllAvailable()
     finally:
         q.stop()
 
-    ok = {r["event_id"] for r in warehouse.read("ev_ok").collect()}
+    ok_rows = {r["event_id"]: r for r in warehouse.read("ev_ok").collect()}
+    assert ok_rows[2]["value"] == 5.0
+    ok = set(ok_rows)
     bad = {r["event_id"] for r in warehouse.read("ev_bad").collect()}
     assert ok == {1, 2, 3}
     # event 2's old bad row remains in quarantine history; event 4 joined it

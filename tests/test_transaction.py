@@ -39,6 +39,19 @@ def test_commit_flips_all_tables(spark, warehouse):
         "b": committed["b"],
     }
 
+    # a partitioned staged write is clustered like write_version's:
+    # ~one file per partition dir, not one per upstream task
+    import glob
+
+    spread = spark.range(200).selectExpr(
+        "id", "CAST(id % 4 AS INT) AS _bucket"
+    ).repartition(8)
+    txn = MultiTableTransaction(warehouse)
+    txn.stage_write("p", spread, partition_by=["_bucket"])
+    vdir = os.path.join(warehouse.table_dir("p"), txn.commit()["p"])
+    for b in range(4):
+        assert len(glob.glob(os.path.join(vdir, f"_bucket={b}", "*.parquet"))) == 1
+
 
 def test_conflict_aborts_everything(spark, warehouse):
     warehouse.write_version("a", _df(spark, 3, "old"))
@@ -346,3 +359,21 @@ def test_sync_collections_atomic_lifecycle(spark, warehouse):
     # second run: checkpoints filter everything out
     res2 = sync_collections_atomic(warehouse, frames, "prod")
     assert all(r.records_synced == 0 for r in res2)
+
+
+def test_sync_collections_atomic_prep_failure_leaves_failed_rows(spark, warehouse):
+    """A batch that fails its prep (here: no cursor column) must close
+    every STARTED history row with a FAILED one."""
+    from qms_datawarehouse_spark.engine import sync_collections_atomic
+    from qms_datawarehouse_spark.operators import history
+
+    frames = {
+        "tix": spark.createDataFrame([("1", "v")], "_id string, v string"),
+        "usr": spark.createDataFrame([("u1", "v")], "_id string, v string"),
+    }
+    with pytest.raises(ValueError, match="cursor column"):
+        sync_collections_atomic(warehouse, frames, "prod")
+    rows = history.read_history(warehouse).collect()
+    for table in frames:
+        statuses = sorted(r.status for r in rows if r.collection == table)
+        assert statuses == ["FAILED", "STARTED"]

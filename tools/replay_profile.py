@@ -52,8 +52,11 @@ def main() -> None:
 
     _wrap(wh_mod.ParquetWarehouse, "write_version")
     _wrap(wh_mod.ParquetWarehouse, "write_version_partial")
+    # staging writers and the one commit routine every write (single
+    # table or transaction) goes through
+    _wrap(wh_mod.ParquetWarehouse, "_stage_version")
     _wrap(wh_mod.ParquetWarehouse, "_stage_version_partial")
-    _wrap(wh_mod.ParquetWarehouse, "_swap_pointer")
+    _wrap(wh_mod.ParquetWarehouse, "_commit")
     _wrap(merge, "merge_upsert_stats")
     _wrap(merge, "dedup_last_write_wins")
     _wrap(join_matview, "_changed_dim_keys")
